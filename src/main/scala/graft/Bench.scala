@@ -62,8 +62,8 @@ object Bench {
     val results = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val c0 = cpuSec()
-      val n = try fn(spark, sfDir).count() catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1L }
+      val n = try Some(fn(spark, sfDir).count()) catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); None }
       val sec = (System.nanoTime() - t0) / 1e9
       val cpu = cpuSec() - c0
       // Release this query's result/checkpoint blocks — across ~50 queries
@@ -71,18 +71,25 @@ object Bench {
       // (the r3 full-run 10-30× degradation).
       val released = CacheHygiene.releaseAllExcept(spark, keep)
       val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      System.err.println(f"[bench] $name: $sec%.1fs cpu=$cpu%.1fs ($n rows, aqe=$aqe, " +
-        f"released=$released, ${CacheHygiene.storageLine(spark, keep)}, canary=${canaryMs()}%.0fms)")
-      (name, sec, cpu)
+      System.err.println(f"[bench] $name: $sec%.1fs cpu=$cpu%.1fs (${n.getOrElse(-1L)} rows, " +
+        f"aqe=$aqe, released=$released, ${CacheHygiene.storageLine(spark, keep)}, " +
+        f"canary=${canaryMs()}%.0fms)")
+      (name, sec, cpu, n.isDefined)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val cs = results.map { case (k, _, c) => s"\"" + k + "\":" + f"$c%.3f" }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val totalCpu = results.map(_._3).sum
+    def obj(f: ((String, Double, Double, Boolean)) => String): String =
+      results.map(r => s"\"${r._1}\":" + f(r)).mkString("{", ",", "}")
+    val qs = obj(_._2.toString)
+    val cs = obj(r => f"${r._3}%.3f")
+    val status = obj(r => if (r._4) "\"ok\"" else "\"failed\"")
+    // a failed query's seconds are not part of the total, and any failure
+    // makes the total invalid: an early throw must not read as a speedup
+    val ok = results.filter(_._4)
+    val total = ok.map(_._2).sum
+    val totalCpu = ok.map(_._3).sum
+    val valid = ok.size == results.size
     val loadAvg = osBean.getSystemLoadAverage
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","valid":$valid,""" +
+      s""""queries":$qs,"status":$status,""" +
       s""""cpuSeconds":$cs,"totalCpuSec":${f"$totalCpu%.1f"},"loadAvgEnd":${f"$loadAvg%.1f"},""" +
       s""""warmupSec":$warmupSec,"cpus":$cpus,"maxHeapMiB":$maxHeapMiB,"sf":"$sfDir"}"""
     // stdout (unprefixed: build.sbt sets run/outputStrategy := StdoutOutput so

@@ -144,7 +144,7 @@ object ScalingBench {
           r.count(); (r, m)
         }
         // fixed-vs-scaling decomposition: setup (undirected distinct +
-        // edge repartition/localCheckpoint) = total − Σ superstep ms
+        // edge repartition, sort and cut) = total − Σ superstep ms
         System.err.println(s"[scaling] local[$cpus] wcc superstep ms: " +
           wccPair._2.metrics.map(_.wallMillis).mkString(","))
         timings += AlgoTiming("wcc", wccSec, wccPair._2.supersteps,

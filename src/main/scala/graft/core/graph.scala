@@ -101,17 +101,19 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
    * hash partitioning": ONE shuffle onto hash(src), parallel-edge
    * aggregation executed partition-locally (hash(src) satisfies the
    * (src,dst) clustering, so Catalyst plans no second exchange), rows
-   * sorted by (src,dst) inside each partition, materialized once via
-   * localCheckpoint — which preserves BOTH the partitioning and the
-   * ordering on the resulting LogicalRDD. Every superstep's
-   * edges⋈frontier sort-merge join then needs neither an exchange nor a
-   * sort on the (large, static) edge side; previously each superstep
-   * re-shuffled (via aggregated → Pregel's own repartition, two full
-   * shuffles of setup) and re-SORTED the full edge frame inside the join.
+   * sorted by src inside each partition, materialized once via
+   * cutLineage — which keeps BOTH the partitioning and the ordering on
+   * the resulting LogicalRDD and drops the size estimate, so no plan
+   * broadcasts the edges. Every superstep's edges⋈frontier sort-merge
+   * join then needs neither an exchange nor a sort on the (large, static)
+   * edge side. Within one src the rows keep their arrival order: a dst
+   * sort key changes no message group's fold order (a group's messages
+   * come from distinct sources) and cost 1.7 s wall / 7 CPU-s per
+   * 5.8 M rows on 4 cores.
    *
-   * Hand the result to [[graft.core.Pregel.run]] with
-   * `PregelConfig.edgesPrepared = true`; Pregel releases the checkpoint
-   * blocks when the loop ends, so don't reuse the frame after the run.
+   * This is the edge frame [[graft.core.Pregel.run]] takes; Pregel
+   * releases the checkpoint blocks when the loop ends, so don't reuse the
+   * frame after the run.
    *
    * @param withWeight false drops the weight column entirely —
    *        connectivity algorithms (WCC) never read it, and the
@@ -129,15 +131,11 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       case (a, true) => shuffled.groupBy(col("src"), col("dst"))
         .agg(a.agg(col("weight")).cast("double").as("weight"))
     }
-    // The eager materialization MUST run with AQE disabled: an eager
-    // localCheckpoint under AQE snapshots the partitioning of the
-    // not-yet-finalized adaptive plan — UnknownPartitioning — and the
-    // whole point of this layout (exchange-free, sort-free superstep
-    // joins) is silently lost. Measured: with AQE on at checkpoint time
-    // the captured partitioning is UnknownPartitioning(0); with it off,
-    // hashpartitioning(src) + [src ASC, dst ASC] both survive.
-    Lineage.withFastIteration(spark, enabled = true) {
-      flat.sortWithinPartitions("src", "dst").localCheckpoint(true)
+    // AQE off while the cut materializes: under AQE the checkpoint records
+    // UnknownPartitioning and the exchange-free, sort-free superstep joins
+    // are silently lost.
+    Lineage.withFastIteration(spark) {
+      flat.sortWithinPartitions("src").cutLineage()
     }
   }
 

@@ -36,8 +36,10 @@ object Lineage {
    *  AQE — its runtime broadcast conversion and partition coalescing are a
    *  measured 2-3× win there (bench r2: louvain 17→58 s, scc 12→32 s when
    *  AQE was blanket-disabled), while big superstep frames measure the
-   *  opposite (re-planning latency, nothing to broadcast). Callers gate on
-   *  the edge-frame row count (see Pregel.run).
+   *  opposite (re-planning latency, nothing to broadcast). CentralityVariants
+   *  and ShortestPaths gate on the edge-frame row count (aqeOffMinEdges);
+   *  Pregel.run keeps AQE off at every size, because its co-partitioned
+   *  state layout only survives a cut made with AQE off.
    *
    *  CONCURRENCY CONTRACT (ADVICE r2): the toggle mutates the session conf
    *  for the loop's duration, so algorithm runs assume a single-threaded

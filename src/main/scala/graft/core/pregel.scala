@@ -15,10 +15,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  * @param maxIterations   hard cap on supersteps
  * @param checkpointDir   when set, every `checkpointEvery` supersteps the
  *                        vertex state is written to
- *                        `<dir>/superstep=<k>/state` as parquet and the
- *                        in-flight plan is replaced by a re-read of that
- *                        parquet — this both cuts lineage and guarantees a
- *                        resumed run continues from byte-identical state.
+ *                        `<dir>/superstep=<k>/state` as parquet. The loop
+ *                        keeps going from its in-memory cut (the values the
+ *                        parquet holds, in the co-partitioned layout); a
+ *                        resumed run starts from that parquet, so it
+ *                        continues from byte-identical state.
  * @param checkpointEvery cadence of durable checkpoints
  * @param trackMetrics    when true, per-superstep lineage metrics
  *                        (messages, active vertices, delta norm, skew
@@ -27,20 +28,13 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  *                        dir is configured)
  * @param stopAfter       test hook: abort the loop after superstep k as if
  *                        the job died (used by resume tests)
- * @param edgesPrepared   the caller already shaped the edge frame via
- *                        [[PropertyGraph.pregelEdges]] (hash(src)-
- *                        partitioned, sorted within partitions,
- *                        checkpointed) — skip the engine's own
- *                        repartition+sort+checkpoint, avoiding a second
- *                        full shuffle and materialization of the edges
  */
 final case class PregelConfig(
     maxIterations: Int = 20,
     checkpointDir: Option[String] = None,
     checkpointEvery: Int = 1,
     trackMetrics: Boolean = false, // forced on whenever checkpointDir is set
-    stopAfter: Option[Int] = None,
-    edgesPrepared: Boolean = false)
+    stopAfter: Option[Int] = None)
 
 /** One superstep's lineage record (north rule: "every superstep writes
  *  per-partition lineage and metrics — messages sent, delta norm, skew
@@ -104,7 +98,10 @@ object Pregel {
    * @param initial   vertex frame: `id: long`, state columns, plus ACTIVE /
    *                  CHANGED / DELTA markers (init step = reference
    *                  PregelComputation.init)
-   * @param edges     `src, dst, weight` (orientation already applied)
+   * @param edges     `src, dst[, weight]` in the layout of
+   *                  [[PropertyGraph.pregelEdges]] (orientation applied,
+   *                  hash(src)-partitioned, sorted, checkpointed); the run
+   *                  releases its blocks when the loop ends
    * @param msgExpr   message value, evaluated on edge rows joined with the
    *                  *source* vertex state (all state cols visible, plus
    *                  `weight`) — reference sendToNeighbors /
@@ -112,7 +109,8 @@ object Pregel {
    * @param combine   reduces the raw `(id, _msg)` rows to one row per id —
    *                  e.g. Combiners.sum / min / weightedArgmax
    * @param updateExprs new values for the state columns (incl. markers),
-   *                  evaluated on old-state LEFT JOIN combined-messages;
+   *                  evaluated on old state outer-joined with the combined
+   *                  messages;
    *                  `MSG` is null for vertices that received nothing
    */
   def run(
@@ -125,38 +123,29 @@ object Pregel {
 
     val spark = initial.sparkSession
     val ckpt = config.checkpointDir.map(new CheckpointManager(_))
+    val track = config.trackMetrics || ckpt.isDefined
 
-    // Hash-partition the (large, static) edge relation by the join key
-    // ONCE and sort it by src INSIDE each partition; localCheckpoint (NOT
-    // cutLineage — it must keep the partitioning and ordering, and a
-    // once-carried stat can't grow) lets every superstep's edges⋈vertices
-    // sort-merge join reuse BOTH: no exchange and no re-sort of the big
-    // side per superstep (the re-sort was measured at ~60% of a WCC
-    // superstep's wall on the 46 M-edge scaling graph). This is the
-    // per-superstep shuffle-minimization the north rule calls out.
-    // `edgesPrepared` callers did this themselves via pregelEdges —
-    // folding the parallel-edge aggregation into the same single shuffle.
-    // AQE must be OFF while the eager checkpoint materializes, or the
-    // LogicalRDD snapshots the unfinalized adaptive plan's partitioning —
-    // UnknownPartitioning — and every superstep silently re-shuffles AND
-    // re-sorts the full edge frame (see PropertyGraph.pregelEdges).
-    val edgesPart =
-      if (config.edgesPrepared) edges
-      else Lineage.withFastIteration(spark, enabled = true) {
-        edges.repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-      }
-    // AQE off only when the superstep frame is big enough that broadcast
-    // conversion can't apply and re-planning latency dominates (measured
-    // both ways — see Lineage.withFastIteration scaladoc). The count scans
-    // the just-checkpointed blocks, not the source.
-    val bigWork = edgesPart.count() >= Lineage.aqeOffMinEdges(spark)
-    Lineage.withFastIteration(spark, bigWork) {
+    // The vertex state takes the edges' layout: hash(id)-partitioned like
+    // pregelEdges' hash(src), sorted by id. cutLineage keeps that layout
+    // across every cut, so each superstep plans as ONE Spark job with ONE
+    // exchange: the scatter join (edges ⋈ active state on src = id) is
+    // exchange- and sort-free, the combine shuffles the messages onto
+    // hash(id), and the update join (messages ⋈ state on id) is then
+    // co-partitioned too, the state's order surviving into the next cut.
+    // AQE stays off for the whole loop at every size: a cut under AQE
+    // records UnknownPartitioning and the layout is lost, and its
+    // re-planning is per-superstep latency the pre-shaped frames never
+    // repay.
+    Lineage.withFastIteration(spark) {
 
     var superstep = ckpt.flatMap(_.latestSuperstep).getOrElse(0)
+    // Catalyst drops the repartition when the plan is already hash(id)-
+    // partitioned (PageRank's degree join); a resumed run pays one shuffle
+    // of the reloaded parquet state
     var state =
-      if (superstep > 0) ckpt.get.load(spark, superstep) // resume path
-      else initial.cutLineage() // cut the ingest lineage once
+      (if (superstep > 0) ckpt.get.load(spark, superstep) else initial)
+        .repartition(col("id")).sortWithinPartitions("id")
+        .cutLineage()
 
     var converged = false
     val history = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
@@ -166,27 +155,29 @@ object Pregel {
 
       // scatter: active sources emit along their out-edges, then combine.
       val active = state.where(col(ACTIVE))
-      val raw = edgesPart.join(active, edgesPart("src") === active("id"))
-        .select(edgesPart("dst").as("id"), msgExpr.as(MSG))
-      val track = config.trackMetrics || ckpt.isDefined
+      val raw = edges.join(active, edges("src") === active("id"))
+        .select(edges("dst").as("id"), msgExpr.as(MSG))
       // metrics cost one extra pass over the (small, pre-combined) message
-      // frame; skip it entirely when nobody will read the lineage.
+      // frame; skip it entirely when nobody will read the lineage. The
+      // persisted frame is what the update join below reads, so the
+      // messages are computed once per superstep either way.
       val msgs =
         if (track) combine(raw).persist(StorageLevel.MEMORY_AND_DISK)
         else combine(raw)
       val msgCount = if (track) msgs.count() else -1L
 
-      // gather/apply: old state LEFT JOIN messages → new state. The eager
-      // localCheckpoint is both the superstep barrier and the lineage cut
-      // (iterative plans would otherwise snowball — SURVEY.md §7.4).
-      // Convergence stats ride the SAME materializing action via observe()
+      // gather/apply: messages RIGHT JOIN old state → new state. The eager
+      // cut is both the superstep barrier and the lineage cut (iterative
+      // plans would otherwise snowball — SURVEY.md §7.4). Convergence
+      // stats ride the SAME materializing action via observe()
       // (CollectMetrics accumulators) — a superstep is ONE Spark action,
-      // not a checkpoint action plus a stats aggregate; the removed
-      // per-superstep scheduling round was a measured term of the scaling
-      // floor (VERDICT r1 per-superstep overhead note).
-      val joined = state.join(msgs, Seq("id"), "left_outer")
+      // not a checkpoint action plus a stats aggregate. The state is the
+      // join's right side on purpose: `msgs` also reads `state`, and the
+      // analyzer renames the right side of such a self-join, which would
+      // make the persisted `msgs` miss its cache and be computed twice.
       val obs = org.apache.spark.sql.Observation()
-      val newState = joined.select(col("id") +: updateExprs: _*)
+      val newState = msgs.join(state, Seq("id"), "right_outer")
+        .select(col("id") +: updateExprs: _*)
         .observe(obs,
           sum(col(CHANGED).cast("long")).as("changed"),
           sum(col(ACTIVE).cast("long")).as("active"),
@@ -214,20 +205,16 @@ object Pregel {
 
       converged = changed == 0
       ckpt.foreach { c =>
-        if (superstep % config.checkpointEvery == 0 || converged) {
-          // durable checkpoint: parquet round-trip cuts lineage AND is the
-          // exact state a resumed run would start from.
-          val reread = c.save(state, superstep, m)
-          Lineage.release(state)
-          state = reread.persist(StorageLevel.MEMORY_AND_DISK)
-        }
+        // durable checkpoint: the exact state a resumed run starts from.
+        if (superstep % config.checkpointEvery == 0 || converged)
+          c.save(state, superstep, m)
       }
       config.stopAfter.filter(_ == superstep).foreach { k =>
         throw new PregelKilledException(k)
       }
     }
 
-    Lineage.release(edgesPart)
+    Lineage.release(edges)
     PregelResult(state, superstep, converged, history.toSeq)
     } // withFastIteration
   }
@@ -285,13 +272,11 @@ final class CheckpointManager(dir: String) {
 
   def statePath(k: Int): String = root.resolve(s"superstep=$k").resolve("state").toString
 
-  def save(state: DataFrame, k: Int, m: SuperstepMetrics): DataFrame = {
-    val path = statePath(k)
-    state.write.mode("overwrite").parquet(path)
+  def save(state: DataFrame, k: Int, m: SuperstepMetrics): Unit = {
+    state.write.mode("overwrite").parquet(statePath(k))
     Files.writeString(root.resolve(s"superstep=$k").resolve("metrics.json"), m.toJson)
     Files.writeString(root.resolve("lineage.jsonl"), m.toJson + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    state.sparkSession.read.parquet(path)
   }
 
   def load(spark: SparkSession, k: Int): DataFrame = spark.read.parquet(statePath(k))

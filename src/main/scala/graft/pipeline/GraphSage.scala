@@ -751,7 +751,9 @@ object GraphSage {
     val emb = normalizedEmbedding(hsF.last, dims.last).cutLineage()
     msF.drop(1).foreach(Lineage.release); hsF.foreach(Lineage.release)
     Lineage.release(m1)
-    (layerCnts :+ fullContribs).distinct.foreach(Lineage.release)
+    layerCnts.distinct.foreach(Lineage.release)
+    // the sampled path released fullContribs as soon as its subgraphs existed
+    if (config.sampleSizes.isEmpty) Lineage.release(fullContribs)
     layerContribs.distinct.filterNot(_ eq fullContribs).foreach(Lineage.release)
     TrainLayersResult(layers, losses.toSeq, emb)
   }

@@ -1,9 +1,11 @@
 package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{DataFrame => CDataFrame, SparkSession => CSparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.classic.{DataFrame => CDataFrame, Dataset => CDataset,
+  SparkSession => CSparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.LogicalRDD
 
 /**
  * Thin access shim into package-private Spark API.
@@ -14,20 +16,35 @@ import org.apache.spark.sql.types.StructType
  * MULTIPLIES child sizes — so the carried sizeInBytes grows exponentially
  * in bit length across supersteps, and after a few dozen iterations the
  * driver spends minutes in BigInteger.multiply (Karatsuba/ToomCook) during
- * stats estimation. Rebuilding the DataFrame from the checkpointed
- * internal RDD drops the poisoned stats: the fresh LogicalRDD reports the
- * constant `spark.sql.defaultSizeInBytes` instead.
+ * stats estimation. `cutLineage` rebuilds the checkpoint's LogicalRDD
+ * without the carried stats (and constraints): the fresh node reports the
+ * constant `spark.sql.defaultSizeInBytes` instead. It keeps the
+ * checkpoint's `outputPartitioning` and `outputOrdering`, so a frame cut
+ * from a hash(id)-partitioned, id-sorted plan joins exchange- and sort-free
+ * against another frame with that layout (Pregel's state vs its prepared
+ * edges). The layout is only known when the cut runs with AQE off; under
+ * AQE the checkpoint records UnknownPartitioning.
  */
 object GraftShims {
-  def internalCreateDataFrame(spark: SparkSession, rdd: RDD[InternalRow],
-      schema: StructType): DataFrame =
-    spark.asInstanceOf[CSparkSession].internalCreateDataFrame(rdd, schema)
-
   /** Eagerly materialize `df`, truncate its lineage AND drop its carried
-   *  statistics (see scaladoc above — the localCheckpoint stats poison). */
+   *  statistics (see scaladoc above — the localCheckpoint stats poison);
+   *  the partitioning and ordering survive. The checkpoint states them in
+   *  the executed plan's attributes, which can differ from the frame's own
+   *  (an alias the optimizer removed), so they are renamed positionally. */
   def cutLineage(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(true).asInstanceOf[CDataFrame]
-    internalCreateDataFrame(df.sparkSession, c.queryExecution.toRdd, df.schema)
+    val spark = df.sparkSession.asInstanceOf[CSparkSession]
+    val cut = df.localCheckpoint(true).asInstanceOf[CDataFrame]
+      .queryExecution.logical.asInstanceOf[LogicalRDD]
+    val executed = df.asInstanceOf[CDataFrame].queryExecution.executedPlan.output
+    val rename = AttributeMap(executed.zip(cut.output))
+    def own[E <: Expression](e: E): E =
+      e.transform { case a: Attribute => rename.getOrElse(a, a) }.asInstanceOf[E]
+    val partitioning = cut.outputPartitioning match {
+      case e: Expression => own(e).asInstanceOf[Partitioning]
+      case p => p
+    }
+    CDataset.ofRows(spark, cut.copy(outputPartitioning = partitioning,
+      outputOrdering = cut.outputOrdering.map(own))(spark, None, None))
   }
 
   /** The persisted RDD actually holding a cut frame's checkpoint blocks —

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algos.{PageRank, Wcc}
+import graft.algos.{LabelPropagation, PageRank, Wcc}
 import graft.core._
 import java.nio.file.Files
 
@@ -37,6 +37,25 @@ class PregelCheckpointSpec extends SparkSpec {
       Wcc.Config(pregel = PregelConfig(checkpointDir = Some(dir)))))
     val fresh = longs(Wcc.run(chainGraph))
     assert(resumed == fresh)
+  }
+
+  test("LPA killed at superstep 2 resumes to the identical result") {
+    val dir = tmpDir("lpa-ckpt")
+    val cfg = LabelPropagation.Config(pregel = PregelConfig(checkpointDir = Some(dir),
+      stopAfter = Some(2)))
+    intercept[PregelKilledException] {
+      LabelPropagation.run(chainGraph, cfg).count()
+    }
+    val ckpt = new CheckpointManager(dir)
+    assert(ckpt.latestSuperstep.contains(2))
+    assert(ckpt.lineage.size == 2)
+
+    val resumed = longs(LabelPropagation.run(chainGraph,
+      LabelPropagation.Config(pregel = PregelConfig(checkpointDir = Some(dir)))))
+    val fresh = longs(LabelPropagation.run(chainGraph))
+    assert(resumed == fresh)
+    // the resumed run continued the loop rather than starting over
+    assert(ckpt.lineage.size > 2)
   }
 
   test("PageRank killed mid-run resumes to identical scores (bit-exact)") {
